@@ -37,8 +37,22 @@ object Bench {
     * evaluates every output column and discards it — the cost a consumer
     * of the full result actually pays.
     */
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Untimed warm-up: JIT + codegen + broadcast machinery + FS cache, so
+    * those costs don't inflate the first timed query. Guarded throughout —
+    * a missing/corrupt fixture must surface as a per-query failure, not
+    * kill the run before timing.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1L << 20).selectExpr("sum(id)").collect()
+    for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings"))
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    SparkEntry.all.find(_.name == "q3_top_revenue_orders")
+      .foreach(q => try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () })
+  }
 
   /** Cross-run references are valid only between runs of the SAME
     * measurement methodology. r16 switched the timed action from
@@ -275,27 +289,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.tools.LogHygiene.suppressTinyFrameWindowWarnings()
-
-    // Warm-up (untimed): JIT + codegen + broadcast machinery + FS cache.
-    // Guarded throughout — a missing/corrupt fixture must surface as a
-    // per-query "failed" entry below, not kill the bench before timing.
-    spark.range(1L << 20).selectExpr("sum(id)").collect()
-    for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings"))
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    SparkEntry.all.find(_.name == "q3_top_revenue_orders")
-      .foreach(q => try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () })
+    val spark = Session.local()
+    warmUp(spark, sfDir)
 
     def round3(v: Double): Double = math.rint(v * 1000) / 1000
     def median(xs: Seq[Double]): Double = {

@@ -325,15 +325,6 @@ object Dedup {
     */
   @volatile private[graft] var lastCcRounds: Int = -1
 
-  /** Measurement hook (VERDICT r18 #3): when set, the FIRST star round
-    * writes the small-star frame's formatted physical plan here before
-    * the localCheckpoint truncates its lineage — the committed
-    * plans/r18 dumps could not show the in-loop one-Exchange-per-step
-    * Window because the checkpoint had already flattened it. Written
-    * once per connectedComponents call; None (the default) is zero-cost.
-    */
-  @volatile private[graft] var ccStepPlanSink: Option[java.nio.file.Path] = None
-
   /** Exact dedup on a content digest: first row (min of `keep`) per
     * distinct value of `col`. The payload never shuffles — only the
     * 60-bit digest and the keep-key move.
@@ -759,11 +750,6 @@ object Dedup {
         .select(col("e.eu").as("u"), col("e.ev").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      if (rounds == 1) ccStepPlanSink.foreach { p =>
-        java.nio.file.Files.writeString(p, small.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        ccStepPlanSink = None
-      }
       val smallCp = small.localCheckpoint(false)
       // converged ⟺ the new edge set is a star forest — the exact
       // fixpoint of both steps — tested directly on `small` (one

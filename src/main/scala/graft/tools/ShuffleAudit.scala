@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.metrics.StageMetricsListener
-import org.apache.spark.sql.SparkSession
 
 /** Emits SCALE.md — measured per-query byte flows (input read, shuffle
   * write, spill) at a given scale factor, as evidence for the repo's
@@ -156,14 +155,7 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "SCALE.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
 
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
     def fmt(b: Long): String =
@@ -222,7 +214,7 @@ object ShuffleAudit {
       sb ++= s"| $name | ${fmt(input)} | ${fmt(l.shuffleWriteBytes)} " +
         s"| ${fmt(l.spillBytes)} | $ratio | $claim |\n"
     }
-    sb ++= "\ntx12's 23.9× ratio was re-examined (VERDICT r5 #6, `graft.tools.Tx12Diet`):\n"
+    sb ++= "\ntx12's 23.9× ratio was re-examined (VERDICT r5 #6; measured in `OPTIMIZATION_r19.md`):\n"
     sb ++= "a weighted distinct-doc-list variant (emit each bucket's pairs once per\n"
     sb ++= "DISTINCT doc list with a multiplicity weight) measured **+7.8% shuffle**\n"
     sb ++= "and flat wall at sf0.1 — doc lists repeat too rarely to pay for the extra\n"

@@ -6,18 +6,6 @@ import org.apache.spark.sql.SparkSession
   * sbt forks a single test JVM, so share across suites too).
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.tools.LogHygiene.suppressTinyFrameWindowWarnings()
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
