@@ -2870,6 +2870,8 @@ object SimilarityOps {
     // collected rows the assignment broadcasts anyway — one corpus
     // pass fewer at any scale, and `max(_k)` rides the k-row sizes
     // rollup this audit already pays.
+    // Persisted: the total's arm prunes k, so AQE shares no exchange and
+    // without the cache the broadcast-scored pass runs twice.
     val sizes = semDedupAssign(e, cent, emitK = true)
       .groupBy("cell").agg(count(lit(1)).as("n"), max("_k").as("k"))
       .persist() // k-ish rows; feeds the total AND the output spine

@@ -2,100 +2,84 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's cross-run reference rules are the gate that protects every
-  * other gate — a reference that drifts upward turns real regressions
-  * invisible (the r12 near-miss: four contended mins one commit away from
-  * becoming heal thresholds), one that drifts downward latches false
-  * alarms forever. These laws pin both update rules and the parser that
-  * feeds them, with no Spark session involved.
+/** The bench's cross-run comparison rules are the gate that protects every
+  * other gate — a reference that reads too slow turns real regressions
+  * invisible, one that reads too fast (a previous run on a faster box)
+  * latches false alarms. These laws pin the parser that reads the
+  * previous run, the box-speed normalisation and the two flagging rules,
+  * with no Spark session involved.
   */
 class BenchRefSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.1"
 
   private def body(fields: String): String =
-    s"""{"metric":"total",$fields,"sf":"$sf"}"""
+    s"""{"metric":"total","methodology":"${Bench.methodology}",$fields,"sf":"$sf"}"""
 
-  // ---- parsePriorMin ------------------------------------------------------
+  /** The rows `Bench.main` publishes as `inflated`: each min divided by the
+    * box ratio, against its own reference. */
+  private def flagged(mins: Map[String, Double], ratio: Double,
+      refs: Map[String, Double]): Set[String] =
+    mins.collect { case (q, m) if refs.get(q).exists(Bench.inflated(m, _, ratio)) => q }.toSet
 
-  test("parsePriorMin prefers the monotone queries_ref block over raw queries") {
-    val txt = body(
-      """"queries":{"a":5.415,"b":0.2},"queries_ref":{"a":0.422,"b":0.2}""")
-    assert(Bench.parsePriorMin(txt, sf) == Map("a" -> 0.422, "b" -> 0.2))
+  // ---- parsePrior -----------------------------------------------------------
+
+  test("parsePrior reads the plain queries mins and the calibration seconds") {
+    val p = Bench.parsePrior(body(
+      """"queries":{"a":1.5,"b":0.25},"queries_median":{"a":9.0},"calib_s":0.412"""), sf)
+    assert(p.queries == Map("a" -> 1.5, "b" -> 0.25))
+    assert(p.calib == 0.412)
   }
 
-  test("parsePriorMin falls back to raw queries for pre-r13 files") {
-    val txt = body(""""queries":{"a":1.5,"b":0.25}""")
-    assert(Bench.parsePriorMin(txt, sf) == Map("a" -> 1.5, "b" -> 0.25))
+  test("parsePrior degrades to empty on an sf mismatch or garbage") {
+    val txt = body(""""queries":{"a":0.4},"calib_s":0.4""")
+    assert(Bench.parsePrior(txt, "/root/testdata/sf0.01") == Bench.noPrior)
+    assert(Bench.parsePrior("not json at all", sf) == Bench.noPrior)
+    assert(Bench.parsePrior(body(""""queries":{"a":"x"""), sf).queries.isEmpty)
   }
 
-  test("parsePriorMin degrades to empty on an sf mismatch or garbage") {
-    val txt = body(""""queries_ref":{"a":0.4}""")
-    assert(Bench.parsePriorMin(txt, "/root/testdata/sf0.01").isEmpty)
-    assert(Bench.parsePriorMin("not json at all", sf).isEmpty)
-  }
-
-  // ---- parsePriorFlagship -------------------------------------------------
-
-  test("parsePriorFlagship reads flagship_ref, falling back to the rate") {
-    assert(Bench.parsePriorFlagship(
+  test("parsePrior reads the flagship rate from pipeline_elements_per_sec only") {
+    // an old monotone `flagship_ref` anchor is no longer a reference
+    assert(Bench.parsePrior(
       body(""""flagship_ref":523452,"pipeline_elements_per_sec":374976"""),
-      sf) == 523452.0)
-    assert(Bench.parsePriorFlagship(
-      body(""""pipeline_elements_per_sec":374976"""), sf) == 374976.0)
+      sf).rate == 374976.0)
+    assert(Bench.parsePrior(body(""""flagship_ref":523452"""), sf).rate == 0.0)
   }
 
-  test("parsePriorFlagship accepts scientific notation (rates >= 1e7 " +
+  test("parsePrior accepts scientific notation (rates >= 1e7 " +
     "render as 1.9E7)") {
-    assert(Bench.parsePriorFlagship(
-      body(""""flagship_ref":1.9E7"""), sf) == 1.9e7)
+    assert(Bench.parsePrior(
+      body(""""pipeline_elements_per_sec":1.9E7"""), sf).rate == 1.9e7)
   }
 
-  test("parsePriorFlagship degrades to 0 on sf mismatch") {
-    assert(Bench.parsePriorFlagship(
-      body(""""flagship_ref":523452"""), "/other/sf") == 0.0)
+  test("parsePrior's flagship rate degrades to 0 on sf mismatch") {
+    assert(Bench.parsePrior(
+      body(""""pipeline_elements_per_sec":523452"""), "/other/sf").rate == 0.0)
   }
 
-  // ---- refsCompatible (methodology gate — r16 count()→noop migration) -----
+  // ---- refsCompatible (methodology gate) ------------------------------------
 
-  test("a count-era bench_out.json contributes no references; the noop " +
-    "methodology marker restores them") {
-    // r16 changed the timed action from .count() (Catalyst prunes the
-    // work the row count doesn't need) to full noop materialization —
-    // strictly more work for the pruned class, so count-era minima must
-    // not become noop-era regression thresholds
-    assert(!Bench.refsCompatible(body(""""queries_ref":{"a":0.4}""")))
-    val current = body(""""methodology":"noop","queries_ref":{"a":0.4}""")
+  test("a bench_out.json without the current methodology marker " +
+    "contributes no references") {
+    // count-era (r16 moved to noop materialization) and uncalibrated noop
+    // files both carry times from a different measurement: they re-seed
+    val countEra = """{"queries":{"a":0.4},"calib_s":0.4,"sf":"""" + sf + "\"}"
+    assert(!Bench.refsCompatible(countEra))
+    assert(Bench.parsePrior(countEra, sf) == Bench.noPrior)
+    val noop = countEra.replace("{\"queries\"", "{\"methodology\":\"noop\",\"queries\"")
+    assert(!Bench.refsCompatible(noop))
+    assert(Bench.parsePrior(noop, sf) == Bench.noPrior)
+    val current = body(""""queries":{"a":0.4},"calib_s":0.4""")
     assert(Bench.refsCompatible(current))
-    assert(Bench.parsePriorMin(current, sf) == Map("a" -> 0.4))
-    // a future methodology bump invalidates noop files the same way
-    assert(!Bench.refsCompatible(body(""""methodology":"count"""")))
+    assert(Bench.parsePrior(current, sf) == Bench.Prior(Map("a" -> 0.4), 0.4, 0.0))
   }
 
-  // ---- nextQueryRef (monotone min — VERDICT r12 #1) -----------------------
-
-  test("an inflated row cannot overwrite its committed reference") {
-    // contended sweep: min 5.415 vs committed 0.422 — ref must hold
-    assert(Bench.nextQueryRef(Some(0.422), None, 5.415) == 0.422)
-  }
-
-  test("the isolated re-run heals the reference even when the sweep min " +
-    "stayed inflated") {
-    // sweep never caught a clean sample but the post-sweep isolated rep
-    // did — the ref takes the best evidence available this round
-    assert(Bench.nextQueryRef(Some(0.6), Some(0.519), 5.415) == 0.519)
-  }
-
-  test("a genuinely faster run lowers the bar; first runs seed it") {
-    assert(Bench.nextQueryRef(Some(0.422), None, 0.37) == 0.37)
-    assert(Bench.nextQueryRef(None, None, 1.2) == 1.2)
-  }
-
-  test("a poisoned (pre-r13) upward reference self-repairs on the first " +
-    "clean run") {
-    // the exact r12 near-miss: 5.415 committed as the ref, true steady
-    // state 0.454 — min() restores the honest threshold immediately
-    assert(Bench.nextQueryRef(Some(5.415), None, 0.454) == 0.454)
+  test("tx18: a prior file carrying an old queries_ref block gives no references") {
+    // the stale monotone reference that flagged clean sweeps
+    val old = """{"metric":"total","methodology":"noop",""" +
+      """"queries":{"tx18":0.9},"queries_ref":{"tx18":0.31},""" +
+      """"flagship_ref":562998,"pipeline_elements_per_sec":394818,"sf":"""" + sf + "\"}"
+    assert(Bench.parsePrior(old, sf) == Bench.noPrior)
   }
 
   // ---- inflationThreshold (1.5x + flat 0.5 s slack — VERDICT r14 #1) ------
@@ -120,25 +104,6 @@ class BenchRefSpec extends AnyFunSuite {
     assert(Bench.inflationThreshold(1.99) < Bench.inflationThreshold(2.01))
     val refs = Seq(0.1, 0.5, 1.0, 1.99, 2.0, 2.01, 3.0, 10.0)
     assert(refs.map(Bench.inflationThreshold) == refs.map(Bench.inflationThreshold).sorted)
-  }
-
-  // ---- adjudicateInflated (isolated re-run clears the flag) ---------------
-
-  test("an isolated re-measure inside the threshold clears the published " +
-    "flag (the r14 dd22/ss25 case)") {
-    // ss25: sweep min 3.633 latched, isolated 1.268 vs ref 1.103 — the
-    // adjudication the judge previously did by hand now clears the row
-    assert(!Bench.adjudicateInflated(1.103, Some(1.268)))
-    assert(!Bench.adjudicateInflated(1.625, Some(1.873)))
-  }
-
-  test("a real regression survives adjudication; no isolated evidence " +
-    "keeps the flag") {
-    // isolated min still over threshold => genuinely slow
-    assert(Bench.adjudicateInflated(1.0, Some(2.5)))
-    assert(Bench.adjudicateInflated(4.0, Some(7.0)))
-    // all isolated reps failed => no clean evidence, stay flagged
-    assert(Bench.adjudicateInflated(1.0, None))
   }
 
   // ---- familyDrift (aggregate short-row guard — VERDICT r15 #2) -----------
@@ -180,113 +145,62 @@ class BenchRefSpec extends AnyFunSuite {
     assert(!Bench.familyDrift(Seq.fill(25)((0.5, 0.0))))
   }
 
-  // ---- drift self-adjudication (VERDICT r16 #2) ---------------------------
+  // ---- boxRatio and the normalised comparison -------------------------------
 
-  test("driftSample picks the n most-drifted short-family rows, " +
-    "deterministically (ratio desc, name tie-break), family-gated") {
-    val rows = Seq(
-      ("a_mild", 0.6, 0.5), // 1.2x
-      ("b_hot", 1.5, 0.5), // 3.0x
-      ("c_hot", 0.9, 0.3), // 3.0x — ties with b_hot, name breaks it
-      ("d_long", 9.0, 3.0), // outside the family (ref >= 2)
-      ("e_tiny", 0.9, 0.05), // outside the family (ref < 0.1)
-      ("f_warm", 1.0, 0.5)) // 2.0x
-    assert(Bench.driftSample(rows, n = 3) == Seq("b_hot", "c_hot", "f_warm"))
-    // n larger than the family returns the whole family, still ranked
-    assert(Bench.driftSample(rows, n = 10) ==
-      Seq("b_hot", "c_hot", "f_warm", "a_mild"))
+  test("missing or zero calibration on either side gives box ratio 1.0; " +
+    "silence never suppresses a flag") {
+    assert(Bench.boxRatio(0.58, 0.4) == 0.58 / 0.4)
+    for ((c, p) <- Seq((0.0, 0.4), (0.4, 0.0), (-1.0, 0.4), (0.4, -1.0),
+        (0.0, 0.0), (Double.NaN, 0.4)))
+      assert(Bench.boxRatio(c, p) == 1.0, s"calib $c vs prior $p")
+    // a 3x row is still flagged when no calibration was read
+    assert(Bench.inflated(3.0, 1.0, Bench.boxRatio(0.0, 0.4)))
   }
 
-  test("driftVerdict replays the r16 scenario as contention: uniform sweep " +
-    "inflation whose isolated re-runs sit at the reference") {
-    // sweep latched drift at ~1.31x; the isolated sample re-measures at
-    // ~1.0x of the refs — busy box, not a regression
-    val sample = Seq.fill(10)((0.52, 0.5))
-    assert(Bench.driftVerdict(sample) == "contention")
+  test("a uniform box slowdown (r16/r18: every time and the calibration " +
+    "x1.45) flags nothing") {
+    val refs = (0 until 60).map(i => s"q$i" -> (0.1 + i * 0.08)).toMap
+    val slow = refs.map { case (q, r) => q -> r * 1.45 }
+    val ratio = Bench.boxRatio(0.4 * 1.45, 0.4)
+    assert(flagged(slow, ratio, refs).isEmpty)
+    assert(!Bench.familyDrift(slow.toSeq.map { case (q, m) => (m / ratio, refs(q)) }))
+    // unnormalised, the same run latches drift — the false alarm removed
+    assert(Bench.familyDrift(slow.toSeq.map { case (q, m) => (m, refs(q)) }))
   }
 
-  test("driftVerdict calls a regression only when the drift SURVIVES " +
-    "isolation (same 1.3x bar as the family guard)") {
-    assert(Bench.driftVerdict(Seq.fill(10)((0.7, 0.5))) == "regression")
-    // exactly at the bar is NOT a regression (strict >, like familyDrift;
-    // single pair so the ratio is an exact division, not a summed float)
-    assert(Bench.driftVerdict(Seq((1.3, 1.0))) == "contention")
+  test("r14 dd22/ss25: 2.635 s against ref 1.625 on an unchanged box is " +
+    "not inflated") {
+    assert(!Bench.inflated(2.635, 1.625, 1.0))
   }
 
-  test("driftVerdict: no isolated evidence must not read as exoneration") {
-    assert(Bench.driftVerdict(Seq.empty) == "regression")
-    assert(Bench.driftVerdict(Seq((0.5, 0.0))) == "regression")
+  test("a real regression on a slow box is flagged: one row x3 under a " +
+    "x1.45 box") {
+    val refs = Map("a" -> 0.5, "b" -> 1.2, "c" -> 4.0, "d" -> 0.3)
+    val run = refs.map { case (q, r) => q -> r * 1.45 } + ("b" -> 1.2 * 3 * 1.45)
+    assert(flagged(run, Bench.boxRatio(0.58, 0.4), refs) == Set("b"))
   }
 
-  test("driftClearedCount publishes the per-row evidence behind a mixed " +
-    "verdict: one heavy row can push the sum-ratio over the bar while " +
-    "every row clears its own threshold (r18's drifted run)") {
-    // nine light rows near their refs + one heavy row at 1.74x its ref:
-    // sum ratio 5.47/4.13 = 1.32 > 1.3 -> regression, yet each row sits
-    // under inflationThreshold(ref) = 1.5*ref + 0.5 -> cleared = 10
-    val sample = Seq.fill(9)((0.396, 0.337)) :+ (1.901, 1.094)
-    assert(Bench.driftVerdict(sample) == "regression")
-    assert(Bench.driftClearedCount(sample) == 10)
-    // a genuinely regressed row is NOT counted as cleared
-    assert(Bench.driftClearedCount(Seq((2.2, 1.094), (0.3, 0.3))) == 1)
-    assert(Bench.driftClearedCount(Seq.empty) == 0)
-    // exactly at the threshold clears (<=, matching adjudicateInflated's
-    // strict > for staying flagged)
-    assert(Bench.driftClearedCount(Seq((2.0, 1.0))) == 1)
+  test("references under 0.1 s never flag") {
+    assert(!Bench.inflated(5.0, 0.09, 1.0))
   }
 
-  // ---- driftDivisor (drift-normalized PERF survival — VERDICT r18 #2) -----
-
-  test("driftDivisor is the median iso/ref ratio of the adjudication " +
-    "sample — the box-speed multiplier a comparison divides out") {
-    // r18's scenario: untouched rows isolated at ~1.45x their refs
-    val sample = Seq((0.725, 0.5), (1.45, 1.0), (0.29, 0.2))
-    assert(math.abs(Bench.driftDivisor(sample) - 1.45) < 1e-9)
-    // even count: mean of the middle two
-    assert(math.abs(Bench.driftDivisor(
-      Seq((1.2, 1.0), (1.4, 1.0), (1.6, 1.0), (1.8, 1.0))) - 1.5) < 1e-9)
+  test("25 short rows at x1.4: drift latches at box ratio 1.0, not at 1.4") {
+    val rows = Seq.fill(25)((0.7, 0.5))
+    assert(Bench.familyDrift(rows.map { case (m, r) => (m / 1.0, r) }))
+    assert(!Bench.familyDrift(rows.map { case (m, r) => (m / 1.4, r) }))
   }
 
-  test("driftDivisor's median resists one genuinely regressed row in a " +
-    "mostly-untouched sample (the most-drifted-first selection bias)") {
-    val sample = Seq((5.0, 1.0)) ++ Seq.fill(8)((1.4, 1.0))
-    assert(math.abs(Bench.driftDivisor(sample) - 1.4) < 1e-9)
-  }
+  // ---- flagshipInflated -----------------------------------------------------
 
-  test("driftDivisor degrades to a safe 1.0 with no evidence, and skips " +
-    "zero references") {
-    assert(Bench.driftDivisor(Seq.empty) == 1.0)
-    assert(Bench.driftDivisor(Seq((0.5, 0.0))) == 1.0)
-    // a FASTER box publishes a sub-1 divisor — normalization is two-sided
-    assert(math.abs(Bench.driftDivisor(Seq((0.8, 1.0))) - 0.8) < 1e-9)
-  }
-
-  // ---- nextFlagshipRef (upward-only, clean-run-only, 2x cap) --------------
-
-  test("flagship ref rises on a clean faster run and holds on a slower one") {
-    assert(Bench.nextFlagshipRef(500000, 523452, failed = false,
-      inflated = false) == 523452.0)
-    assert(Bench.nextFlagshipRef(523452, 467296, failed = false,
-      inflated = false) == 523452.0)
-  }
-
-  test("a failed or inflated flagship pass cannot move the anchor") {
-    assert(Bench.nextFlagshipRef(523452, 0.0, failed = true,
-      inflated = false) == 523452.0)
-    assert(Bench.nextFlagshipRef(523452, 900000, failed = false,
-      inflated = true) == 523452.0)
-  }
-
-  test("an anomalous fast outlier above 2x prior is rejected (ADVICE r12)") {
-    assert(Bench.nextFlagshipRef(500000, 1100000, failed = false,
-      inflated = false) == 500000.0)
-    // exactly-2x is still accepted — the cap rejects only implausible jumps
-    assert(Bench.nextFlagshipRef(500000, 1000000, failed = false,
-      inflated = false) == 1000000.0)
-  }
-
-  test("the first clean run seeds the anchor (no prior)") {
-    assert(Bench.nextFlagshipRef(0.0, 434047, failed = false,
-      inflated = false) == 434047.0)
+  test("flagship: a failed pass is never compared, and a normalised rate " +
+    "under prior/1.5 is flagged") {
+    assert(!Bench.flagshipInflated(0.0, 500000, 1.0, failed = true))
+    assert(Bench.flagshipInflated(300000, 500000, 1.0, failed = false))
+    // the same rate on a box 1.45x slower is the prior speed: not flagged
+    assert(!Bench.flagshipInflated(300000, 500000, 1.45, failed = false))
+    // no prior rate: nothing to compare against
+    assert(!Bench.flagshipInflated(1.0, 0.0, 1.0, failed = false))
+    // a real 2x slowdown on that slow box still flags
+    assert(Bench.flagshipInflated(150000, 500000, 1.45, failed = false))
   }
 }
